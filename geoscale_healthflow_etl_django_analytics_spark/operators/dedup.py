@@ -373,16 +373,18 @@ def minhash_perm_band_hashes(
     shingled = docs.selectExpr(
         "doc_id", f"explode({shingle_hashes}) AS h"
     )
-    sig = shingled.groupBy("doc_id").agg(
-        *[
-            F.expr(f"min(({a}L * (h % {P}L) + {b}L) % {P}L)").alias(f"m{i}")
-            for i, (a, b) in enumerate(coeffs)
-        ]
+    # the 64 mins as ONE expression (a named_struct over the
+    # aggregates): one parse instead of 64 expr() round trips, ~0.15 s
+    # per build.  No temp view — this also runs inside foreachBatch.
+    mins = ", ".join(
+        f"'m{i}', min(({a}L * (h % {P}L) + {b}L) % {P}L)"
+        for i, (a, b) in enumerate(coeffs)
     )
+    sig = shingled.groupBy("doc_id").agg(F.expr(f"named_struct({mins}) AS m"))
     band_cells = ", ".join(
         "named_struct('band', CAST({b} AS INT), 'bh', "
         "md5(concat_ws(',', {cols})))".format(
-            b=b, cols=", ".join(f"m{b * r + j}" for j in range(r))
+            b=b, cols=", ".join(f"m.m{b * r + j}" for j in range(r))
         )
         for b in range(bands)
     )
@@ -516,6 +518,27 @@ def lsh_band_hashes(
     )
 
 
+def checkpoint_band_table(bands: DataFrame) -> tuple[DataFrame, int]:
+    """Materialize a (doc_id, band, bh) table for :func:`minhash_lsh_pairs`.
+
+    Returns ``(table, max_bucket)``: the ``localCheckpoint()``ed table
+    with ``__bsz`` — its (band, bh) bucket's row count — on every row,
+    and the largest bucket size, read through an ``Observation`` on the
+    checkpoint's own job (0 for an empty table).  The salting stage
+    decides from these alone, so it runs no census action."""
+    from pyspark.sql import Observation, Window
+
+    obs = Observation()
+    table = (
+        bands.withColumn(
+            "__bsz", F.count("*").over(Window.partitionBy("band", "bh"))
+        )
+        .observe(obs, F.max("__bsz").alias("max_bsz"))
+        .localCheckpoint()
+    )
+    return table, obs.get["max_bsz"] or 0
+
+
 def minhash_lsh_pairs(
     docs: DataFrame,
     text_col: str = "text",
@@ -524,7 +547,7 @@ def minhash_lsh_pairs(
     k: int = 3,
     threshold: float = 0.8,
     bucket_salts: int | None = None,
-    band_table: DataFrame | None = None,
+    band_table: tuple[DataFrame, int] | None = None,
 ) -> DataFrame:
     """Tier 3b — LSH banding: TRUE-PERMUTATION MinHash signature
     (:func:`minhash_perm_band_hashes`) sliced into ``bands`` bands of
@@ -550,35 +573,37 @@ def minhash_lsh_pairs(
     tests/test_skew.py::test_lsh_mega_cluster_salted_buckets.
     """
     # CONSTRUCTION-TIME EXECUTION CONTRACT: the band-hash table is
-    # eagerly checkpointed HERE — building this DataFrame runs the
-    # shingle → per-permutation-min → band pipeline as a Spark job
-    # before any action on the returned frame. Deliberate: three
-    # downstream consumers (the over-cap bucket census, both sides of
-    # the expansion self-join) read materialized blocks instead of
-    # re-deriving the pipeline, and lazy cache() would race its
-    # first-use between them. Callers that only want the plan shape
-    # should build on minhash_perm_band_hashes directly (ADVICE r5 #2).
+    # eagerly checkpointed HERE (:func:`checkpoint_band_table`) —
+    # building this DataFrame runs the shingle → per-permutation-min →
+    # band pipeline as a Spark job before any action on the returned
+    # frame. Deliberate: both sides of the expansion self-join read
+    # materialized blocks instead of re-deriving the pipeline, and lazy
+    # cache() would race its first-use between them. The same job
+    # carries each row's bucket size and observes the largest one, so
+    # the salting decision below costs no census action of its own.
+    # Callers that only want the plan shape should build on
+    # minhash_perm_band_hashes directly (ADVICE r5 #2).
     # ``band_table`` (r13, guide §1.2): a caller that ALSO persists
     # the (doc_id, band, bh) table (write_cluster_table stores it as
-    # the incremental-ingest index) passes its already-materialized
-    # frame, so the shingle -> 64-min -> band derivation — the
-    # expensive corpus pass of this operator — runs once per corpus,
-    # not once per consumer.  Must be localCheckpoint()ed (or
-    # otherwise materialized) by the caller; values identical by
-    # construction (it is this very derivation).
-    exploded = (
+    # the incremental-ingest index) passes the
+    # :func:`checkpoint_band_table` result it already holds, so the
+    # shingle -> 64-min -> band derivation — the expensive corpus pass
+    # of this operator — runs once per corpus, not once per consumer.
+    exploded, max_bsz = (
         band_table
         if band_table is not None
-        else minhash_perm_band_hashes(
-            docs, text_col, num_perm, bands, k
-        ).localCheckpoint()
+        else checkpoint_band_table(
+            minhash_perm_band_hashes(docs, text_col, num_perm, bands, k)
+        )
     )
     if bucket_salts is not None:
         # fixed salt count (test/benchmark knob): same doc → same
         # sub-bucket within a band, different docs spread uniformly.
-        exploded = exploded.withColumn(
-            "salt", F.pmod(F.xxhash64(F.col("doc_id"), F.col("band")), F.lit(bucket_salts))
-        )
+        salt = F.pmod(F.xxhash64(F.col("doc_id"), F.col("band")), F.lit(bucket_salts))
+    elif max_bsz <= _SALT_CAP:
+        # every gate corpus: salt is a LITERAL 0 — output provably
+        # identical to the unsalted form, and no salting work at all
+        salt = F.lit(0).cast("bigint")
     else:
         # ADAPTIVE bucket-cap salting, oracle-replayable (md5-derived
         # salt, data-dependent but deterministic). A band bucket larger
@@ -593,55 +618,15 @@ def minhash_lsh_pairs(
         # true near-dup pair split apart here still meets in any of
         # its other 15 bands, so recall loss is confined to pairs
         # whose ONLY collision was the pathological bucket — exactly
-        # the pairs the verify stage would discard anyway.
-        #
-        # Only the OVER-CAP buckets (a handful of rows even at x50,
-        # zero at gate scale) matter. The census runs over the
-        # CHECKPOINTED band table and is collected under a hard cap
-        # (r7, ADVICE r6 #2: the former unconditional
-        # F.broadcast(census) was driver-unbounded on adversarial
-        # corpora — worst case ~band_rows/_SALT_CAP entries):
-        #   * empty census (every gate corpus): salt is a LITERAL 0 —
-        #     no join stage at all, output provably identical and the
-        #     sf0.1 plan drops the whole broadcast-join stage;
-        #   * <= _CENSUS_COLLECT_CAP rows: the collected census is
-        #     re-parallelized as a local relation and broadcast —
-        #     bounded by construction;
-        #   * larger (degenerate corpus): no driver collect; the full
-        #     census joins under a pinned shuffle_hash hint (the same
-        #     never-broadcast-the-data-dependent-side rule the
-        #     substring-spans dup join pins).
-        census = (
-            exploded.groupBy("band", "bh")
-            .agg(F.count("*").alias("__bsz"))
-            .filter(F.col("__bsz") > _SALT_CAP)
-        )
-        census_rows = census.limit(_CENSUS_COLLECT_CAP + 1).collect()
-        n_salts = F.ceil(F.col("__bsz") / F.lit(_SALT_TARGET)).cast("bigint")
-        salted = F.when(
-            F.col("__bsz").isNotNull(),
+        # the pairs the verify stage would discard anyway. The bucket
+        # size rides on every row (``__bsz``), so no census join and
+        # no driver collect exist on any corpus.
+        salt = F.when(
+            F.col("__bsz") > _SALT_CAP,
             md5_int32(F.concat_ws(":", F.col("doc_id"), F.col("band")))
-            % n_salts,
+            % F.ceil(F.col("__bsz") / F.lit(_SALT_TARGET)).cast("bigint"),
         ).otherwise(F.lit(0).cast("bigint"))
-        if not census_rows:
-            exploded = exploded.withColumn("salt", F.lit(0).cast("bigint"))
-        elif len(census_rows) <= _CENSUS_COLLECT_CAP:
-            overcap = docs.sparkSession.createDataFrame(
-                census_rows, census.schema
-            )
-            exploded = (
-                exploded.join(F.broadcast(overcap), ["band", "bh"], "left")
-                .withColumn("salt", salted)
-                .drop("__bsz")
-            )
-        else:
-            exploded = (
-                exploded.join(
-                    census.hint("shuffle_hash"), ["band", "bh"], "left"
-                )
-                .withColumn("salt", salted)
-                .drop("__bsz")
-            )
+    exploded = exploded.withColumn("salt", salt)
     bucket_key = ["band", "bh", "salt"]
     # Candidate expansion as a CODEGEN SELF-JOIN on the bucket key over
     # the eagerly-materialized band-hash table (the signature pipeline
@@ -705,12 +690,6 @@ def minhash_lsh_pairs(
 # byte-identical to the historical unsalted form.
 _SALT_CAP = 512
 _SALT_TARGET = 128
-# Max over-cap census rows the salting stage will pull to the driver
-# (ADVICE r6 #2). A census this size means >= _CENSUS_COLLECT_CAP *
-# _SALT_CAP band rows live in mega-buckets (~10M+ rows); beyond it the
-# census joins via a pinned shuffle_hash hint instead of ever touching
-# the driver.
-_CENSUS_COLLECT_CAP = 20_000
 
 SIMHASH_BITS = 60
 
@@ -862,6 +841,21 @@ def _local_union_find(pairs: list) -> dict:
     return {n: find(n) for n in nodes}
 
 
+def _id_table(like: DataFrame, **cols: list) -> DataFrame:
+    """A driver-built table, every column typed as ``like``'s first
+    column — the LABEL TABLES of :func:`connected_components`."""
+    import pyarrow as pa
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    id_type = like.schema[0].dataType
+    arrow_type = to_arrow_type(id_type)
+    return like.sparkSession.createDataFrame(
+        pa.table({n: pa.array(v, type=arrow_type) for n, v in cols.items()}),
+        T.StructType([T.StructField(n, id_type) for n in cols]),
+    )
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "doc_a",
@@ -907,6 +901,14 @@ def connected_components(
     dimension-sized (one row per non-singleton node *after*
     contraction), so the final join broadcasts.
 
+    LABEL TABLES: both driver-built tables (the fast path's
+    ``(doc_id, component)`` result and the level-two ``node -> min``
+    mapping) are created from a pyarrow Table typed with the input's
+    id type (int or bigint; empty tables included).  Spark parses that
+    into a JVM-side local relation, so no sink reading a label table
+    runs Python-worker tasks (``createDataFrame`` over a list of rows
+    would produce a PythonRDD).
+
     ``input_cheap`` (r13, guide §5 driver/job count): set it when
     re-running the ``edges`` plan costs ~nothing (the caller already
     materialized it — e.g. the split family's checkpointed pair set).
@@ -932,23 +934,16 @@ def connected_components(
             # rows IS the complete distinct edge set: finish with no
             # further Spark work at all (self-loops only contribute
             # their node; duplicates are impossible after distinct)
-            from pyspark.sql import types as T
-
             comp_map = _local_union_find(
                 [(r["a"], r["b"]) for r in rows if r["a"] != r["b"]]
             )
             node_set = sorted(
                 {r["a"] for r in rows} | {r["b"] for r in rows}
             )
-            id_type = raw.schema["a"].dataType
-            return edges.sparkSession.createDataFrame(
-                [(n, comp_map.get(n, n)) for n in node_set],
-                T.StructType(
-                    [
-                        T.StructField("doc_id", id_type),
-                        T.StructField("component", id_type),
-                    ]
-                ),
+            return _id_table(
+                raw,
+                doc_id=node_set,
+                component=[comp_map.get(n, n) for n in node_set],
             )
     raw = raw.localCheckpoint()
     # no checkpoint: consumed once by the final label join, reading
@@ -987,20 +982,11 @@ def connected_components(
         mapping is total over non-singletons; singletons label
         themselves via the coalesce.
         """
-        from pyspark.sql import types as T
-
         comp_map = _local_union_find(
             [(r["a"], r["b"]) for r in edge_rows]
         )
-        id_type = raw.schema["a"].dataType
-        comp_df = raw.sparkSession.createDataFrame(
-            list(comp_map.items()),
-            T.StructType(
-                [
-                    T.StructField("a", id_type),
-                    T.StructField("component", id_type),
-                ]
-            ),
+        comp_df = _id_table(
+            raw, a=list(comp_map), component=list(comp_map.values())
         )
         return nodes.join(
             F.broadcast(comp_df), nodes.node == comp_df.a, "left"

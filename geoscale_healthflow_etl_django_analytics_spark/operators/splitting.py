@@ -129,6 +129,7 @@ def write_cluster_table(index_docs: DataFrame, path: str) -> None:
     silently re-bucket quarantined docs into train/val/test — the
     exact leak quarantine exists to prevent."""
     from .dedup import (
+        checkpoint_band_table,
         connected_components,
         minhash_lsh_pairs,
         minhash_perm_band_hashes,
@@ -138,9 +139,11 @@ def write_cluster_table(index_docs: DataFrame, path: str) -> None:
     # materialized band table feeds the LSH pair generation AND the
     # persisted ``bands`` artifact — previously each consumer re-ran
     # the shingle -> 64-min -> band corpus pass.
-    index_bands = minhash_perm_band_hashes(index_docs).localCheckpoint()
+    index_bands, max_bsz = checkpoint_band_table(
+        minhash_perm_band_hashes(index_docs)
+    )
     edges = minhash_lsh_pairs(
-        index_docs, threshold=0.8, band_table=index_bands
+        index_docs, threshold=0.8, band_table=(index_bands, max_bsz)
     )
     comp = connected_components(edges).select(
         "doc_id",
@@ -148,9 +151,9 @@ def write_cluster_table(index_docs: DataFrame, path: str) -> None:
         split_of_cluster(F.col("component")).alias("split"),
     )
     comp.write.mode("overwrite").parquet(os.path.join(path, "clusters"))
-    index_bands.write.mode("overwrite").parquet(
-        os.path.join(path, "bands")
-    )
+    index_bands.select("doc_id", "band", "bh").write.mode(
+        "overwrite"
+    ).parquet(os.path.join(path, "bands"))
     with open(os.path.join(path, "_meta.json"), "w") as fh:
         json.dump({"n_index_docs": index_docs.count()}, fh)
 
@@ -252,6 +255,25 @@ def ensure_cluster_table(index_docs: DataFrame, path: str) -> None:
     except (OSError, ValueError):
         pass
     write_cluster_table(index_docs, path)
+
+
+def read_cluster_table(docs: DataFrame, path: str) -> DataFrame:
+    """``path``/clusters read with its known schema — ``docs``' doc_id
+    type for ``doc_id`` and ``cluster_id``, plus the string ``split`` —
+    so the read runs no schema-inference job."""
+    from pyspark.sql import types as T
+
+    id_type = docs.schema["doc_id"].dataType
+    schema = T.StructType(
+        [
+            T.StructField("doc_id", id_type),
+            T.StructField("cluster_id", id_type),
+            T.StructField("split", T.StringType()),
+        ]
+    )
+    return docs.sparkSession.read.schema(schema).parquet(
+        os.path.join(path, "clusters")
+    )
 
 
 def incremental_leakage_safe_split(
@@ -422,8 +444,7 @@ def fold_batch_into_cluster_table(
     list-files race."""
     from .dedup import minhash_perm_band_hashes
 
-    spark = docs.sparkSession
-    iclu = spark.read.parquet(os.path.join(path, "clusters"))
+    iclu = read_cluster_table(docs, path)
     # band-hash the batch ONCE: the same table feeds candidate
     # generation (via incremental_pairs_vs_index) AND the append to
     # path/bands — the previous form derived it twice, paying the

@@ -2530,9 +2530,7 @@ def curation_incremental_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     splitting.ensure_cluster_table(
         docs.filter(~batch_pred(F.col("doc_id"))), path
     )
-    import os
-
-    iclu = spark.read.parquet(os.path.join(path, "clusters"))
+    iclu = splitting.read_cluster_table(docs, path)
     pairs = incremental_minhash_pairs(
         docs, threshold=0.8, new_pred=batch_pred
     )
@@ -2566,8 +2564,6 @@ def curation_incremental_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 def curation_incremental_split_indexed(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-
     from .operators import splitting
 
     docs = catalog.load_table(spark, sf_dir, "documents")
@@ -2576,7 +2572,7 @@ def curation_incremental_split_indexed(
     splitting.ensure_cluster_table(
         docs.filter(~batch_pred(F.col("doc_id"))), path
     )
-    iclu = spark.read.parquet(os.path.join(path, "clusters"))
+    iclu = splitting.read_cluster_table(docs, path)
     pairs = splitting.incremental_pairs_vs_index(
         docs, batch_pred, path, threshold=0.8
     )
@@ -2837,8 +2833,6 @@ FROM bcomp2 bc LEFT JOIN comp_agg2 ca USING (bcomp)
     "assignments and the folded read-side coalesce semantics.",
 )
 def curation_cluster_table_update(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from .operators import splitting
 
     docs = catalog.load_table(spark, sf_dir, "documents")
@@ -2847,7 +2841,7 @@ def curation_cluster_table_update(spark: SparkSession, sf_dir: str) -> DataFrame
     b2_pred = lambda c: c % 10 >= 8  # noqa: E731
     path = _roundtrip_path("cluster_fold", sf_dir)
     splitting.ensure_folded_cluster_table(docs, idx_pred, b1_pred, path)
-    iclu = spark.read.parquet(os.path.join(path, "clusters"))
+    iclu = splitting.read_cluster_table(docs, path)
     pairs = splitting.incremental_pairs_vs_index(
         docs, b2_pred, path, threshold=0.8
     )
@@ -3189,8 +3183,6 @@ FROM bcomp3 bc LEFT JOIN comp_agg3 ca USING (bcomp)
 def curation_cluster_table_lifecycle(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-
     from .operators import splitting
 
     docs = catalog.load_table(spark, sf_dir, "documents")
@@ -3202,7 +3194,7 @@ def curation_cluster_table_lifecycle(
     splitting.ensure_cluster_table_lifecycle(
         docs, idx_pred, [b1_pred, b2_pred], path, compact=True
     )
-    iclu = spark.read.parquet(os.path.join(path, "clusters"))
+    iclu = splitting.read_cluster_table(docs, path)
     pairs = splitting.incremental_pairs_vs_index(
         docs, b3_pred, path, threshold=0.8
     )

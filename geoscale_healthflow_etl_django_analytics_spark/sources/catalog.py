@@ -9,10 +9,12 @@ Catalyst prunes partitions/row-groups from pushed-down predicates.
 Scale notes:
 - Reads are plain ``spark.read.parquet`` so filter pushdown, column
   pruning and (at cluster scale) partition pruning all apply.
-- The nanosecond-timestamp feed (``events.ts``) is read via the
-  nanos-as-long legacy mode and converted to ``timestamp_ntz`` at
-  microsecond precision — the same truncation DuckDB applies, so the
-  oracle sees identical values.
+- ``events.ts`` is a microsecond timestamp in the sf0.001, sf0.01 and
+  sf0.1 test data and is read as stored.  Only a file that stores it
+  as int64 nanoseconds (parquet TIMESTAMP(NANOS)) takes the
+  conversion: it is read via the nanos-as-long legacy mode and turned
+  into ``timestamp_ntz`` at microsecond precision — the same
+  truncation DuckDB applies, so the oracle sees identical values.
 """
 
 from __future__ import annotations
@@ -33,8 +35,9 @@ TABLES = (
     "embeddings",
 )
 
-# columns written as parquet TIMESTAMP(NANOS) by the data generator;
-# Spark reads them as long (nanosAsLong) and we rebuild a timestamp.
+# columns that may be written as parquet TIMESTAMP(NANOS); Spark reads
+# those as long (nanosAsLong) and we rebuild a timestamp.  Microsecond
+# files read as timestamps and are left alone.
 _NANOS_TS_COLUMNS: dict[str, tuple[str, ...]] = {"events": ("ts",)}
 
 

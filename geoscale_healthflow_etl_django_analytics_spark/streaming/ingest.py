@@ -37,6 +37,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -48,11 +49,14 @@ _DOC_COLS = ["doc_id", "text", "n_chars"]
 
 def _store_read(spark: SparkSession, path: str, like: DataFrame) -> DataFrame:
     """Read an append store if it has data, else an empty frame with
-    the same schema."""
+    the same schema.  The empty frame is ``like.limit(0)``, which the
+    optimizer folds to an empty JVM-side local relation: an empty
+    ``createDataFrame`` would be a PythonRDD, and every action reading
+    the index ∪ store union would run empty Python-worker tasks."""
     try:
         return spark.read.parquet(path).select(*like.columns)
-    except Exception:
-        return spark.createDataFrame([], like.schema)
+    except AnalysisException:
+        return like.limit(0)
 
 
 def accept_batch(

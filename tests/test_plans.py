@@ -309,27 +309,55 @@ def test_simhash_adaptive_pinned_exchange_no_cartesian(spark):
 
 
 def test_minhash_salting_empty_census_fast_path(spark):
-    """r7 census rework (ADVICE r6 #2): the over-cap census is
-    collected under a hard cap instead of unconditionally broadcast.
-    On every gate corpus the census is EMPTY — pin that precondition
-    — so the salting stage is a literal salt-0 column (no join), and
-    the pair set must equal the fixed-single-salt variant (salting
-    provably inactive)."""
+    """The salting census is read off the band-table materialization:
+    ``checkpoint_band_table`` carries each row's bucket size and
+    observes the largest one on the checkpoint's own job.  It must
+    agree with the carried column, and on every gate corpus it stays
+    within _SALT_CAP — pin that precondition — so the salting stage is
+    a literal salt-0 column, and the pair set must equal the
+    fixed-single-salt variant (salting provably inactive)."""
     from geoscale_healthflow_etl_django_analytics_spark.operators import dedup as dd
 
     docs = load_table(spark, SF, "documents")
-    exploded = dd.minhash_perm_band_hashes(docs)
-    census = (
-        exploded.groupBy("band", "bh")
-        .agg(F.count("*").alias("__bsz"))
-        .filter(F.col("__bsz") > dd._SALT_CAP)
-    )
-    assert census.count() == 0
-    fast = {tuple(r) for r in dd.minhash_lsh_pairs(docs).collect()}
+    bands, max_bsz = dd.checkpoint_band_table(dd.minhash_perm_band_hashes(docs))
+    assert max_bsz == bands.agg(F.max("__bsz")).first()[0]
+    assert 0 < max_bsz <= dd._SALT_CAP
+    fast = {
+        tuple(r)
+        for r in dd.minhash_lsh_pairs(docs, band_table=(bands, max_bsz)).collect()
+    }
     one_salt = {
         tuple(r) for r in dd.minhash_lsh_pairs(docs, bucket_salts=1).collect()
     }
     assert fast == one_salt and len(fast) > 0
+
+
+def _has_python_rdd(df) -> bool:
+    return "PythonRDD" in df._jdf.queryExecution().toRdd().toDebugString()
+
+
+def test_driver_built_tables_have_no_python_rdd(spark, tmp_path):
+    """Tables the driver builds (connected components' label tables,
+    the ingest gate's empty seen-store) must be JVM-side relations: a
+    PythonRDD in their lineage makes every sink that reads them run
+    Python-worker tasks.  test_no_python_eval_in_oracle_queries does
+    not catch this shape — it is an RDD, not a plan expression."""
+    from geoscale_healthflow_etl_django_analytics_spark.operators import dedup as dd
+    from geoscale_healthflow_etl_django_analytics_spark.streaming.ingest import (
+        _store_read,
+    )
+
+    edges = spark.range(6).selectExpr("id AS doc_a", "(id + 1) % 3 AS doc_b")
+    for input_cheap in (False, True):
+        assert not _has_python_rdd(
+            dd.connected_components(edges, input_cheap=input_cheap)
+        ), input_cheap
+    for name in ("dedup_connected_components", "curation_incremental_split"):
+        assert not _has_python_rdd(REGISTRY[name].builder(spark, SF)), name
+    docs = load_table(spark, SF, "documents").select("doc_id", "text", "n_chars")
+    empty = _store_read(spark, str(tmp_path / "seen"), docs)
+    assert empty.schema == docs.schema
+    assert not _has_python_rdd(empty)
 
 
 def test_decontaminate_semijoin_no_broadcast_anywhere(spark):

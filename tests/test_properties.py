@@ -92,6 +92,24 @@ def test_age_buckets_total(spark, ages):
     assert all(g in valid for g in out)
 
 
+def _union_find_labels(edges) -> dict:
+    """Reference CC: node -> component-min by plain union-find."""
+    parent: dict[int, int] = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {n: find(n) for a, b in edges for n in (a, b)}
+
+
 @pytest.mark.parametrize("local_threshold", [0, 200_000])
 @settings(max_examples=5, deadline=None)
 @given(
@@ -113,30 +131,6 @@ def test_connected_components_matches_union_find(spark, local_threshold, edges):
     through the local union-find finish."""
     from geoscale_healthflow_etl_django_analytics_spark.operators import dedup as dd
 
-    parent: dict[int, int] = {}
-
-    def find(x):
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    def union(a, b):
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-
-    nodes = set()
-    for a, b in edges:
-        nodes.update((a, b))
-        if a != b:
-            union(a, b)
-    want = {n: find(n) for n in nodes}
-    # normalize: component label = min member (find() roots are already
-    # minimal under the min-union above after full path compression)
-    want = {n: find(n) for n in nodes}
-
     df = spark.createDataFrame(edges, "doc_a long, doc_b long")
     got = {
         r.doc_id: r.component
@@ -144,4 +138,34 @@ def test_connected_components_matches_union_find(spark, local_threshold, edges):
             df, local_threshold=local_threshold
         ).collect()
     }
-    assert got == want
+    assert got == _union_find_labels(edges)
+
+
+@pytest.mark.parametrize("input_cheap", [False, True])
+@pytest.mark.parametrize("local_threshold", [0, 200_000])
+@pytest.mark.parametrize("id_type", ["int", "bigint"])
+@pytest.mark.parametrize(
+    "edges",
+    [[], [(3, 3), (5, 5)], [(4, 2), (2, 9), (7, 7), (11, 10)]],
+    ids=["empty", "self_loops", "mixed"],
+)
+def test_connected_components_edge_cases(
+    spark, input_cheap, local_threshold, id_type, edges
+):
+    """Shapes the property test does not generate — an empty edge set,
+    self-loops only, int32 ids — on every path that builds a label
+    table: both levels and both ``input_cheap`` values.  The output is
+    (doc_id, component) typed as the input ids, with union-find
+    labels."""
+    from geoscale_healthflow_etl_django_analytics_spark.operators import dedup as dd
+
+    df = spark.createDataFrame(edges, f"doc_a {id_type}, doc_b {id_type}")
+    out = dd.connected_components(
+        df, local_threshold=local_threshold, input_cheap=input_cheap
+    )
+    assert [(f.name, f.dataType.simpleString()) for f in out.schema] == [
+        ("doc_id", id_type),
+        ("component", id_type),
+    ]
+    got = {r.doc_id: r.component for r in out.collect()}
+    assert got == _union_find_labels(edges)
